@@ -55,6 +55,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
+from ._planstats import pinned_partitions
+
 # row -> bool, or (row, ctx) -> bool (iterative condition)
 Predicate = Callable[..., bool]
 
@@ -1049,8 +1051,10 @@ def _grouped_map(
     events) the per-group Arrow round-trip dominates wall time
     (~2.5 ms/key measured); this keeps the identical per-key logic at
     per-partition cost. Memory contract: a partition's rows must fit a
-    worker, tuned by spark.sql.shuffle.partitions — the per-key
-    contract was a special case of that."""
+    worker; the partition count comes from
+    ``_planstats.pinned_partitions`` (input size over the advisory
+    partition size) — the per-key contract was a special case of
+    that."""
     from pyspark.sql import functions as F
 
     out_columns = [f.name for f in _schema_fields(output_schema)]
@@ -1066,11 +1070,6 @@ def _grouped_map(
         if outs:
             yield pd.concat(outs, ignore_index=True)[out_columns]
 
-    # EXPLICIT partition count: a bare repartition(cols) lets AQE
-    # coalesce the exchange by BYTE size, and a CPU-bound NFA over a
-    # few MB of events collapses into one task (measured 8x slower at
-    # sf0.1). Pinning numPartitions keeps the per-key work spread
-    # across the cluster; bytes were never the cost model here.
-    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    arranged = df.repartition(n_parts, *cols).sortWithinPartitions(*cols)
+    arranged = df.repartition(pinned_partitions(df), *cols)
+    arranged = arranged.sortWithinPartitions(*cols)
     return arranged.mapInPandas(batch, output_schema)

@@ -38,6 +38,15 @@ def pagerank_fixed_point(
     with the iterations unrolled as CTEs, the same contract as
     embedding_kmeans / quality_perceptron).
 
+    ``nodes`` (first column; default: every ``src`` and ``dst``) is the
+    node census: it fixes N and seeds each listed node with
+    ``scale DIV N``. Contributions to a ``dst`` outside an explicit
+    ``nodes`` frame are KEPT, not dropped: such a node enters the rank
+    frame after the first iteration (from then on it sends along its
+    own out-edges, or counts as dangling), but never counts in N. Pass
+    ``nodes ⊇ dst`` for the textbook PageRank. ``node`` takes the type
+    of ``dst``.
+
     Exact per-iteration arithmetic (every op BIGINT, all positive, so
     truncating and flooring division agree):
 
@@ -85,14 +94,19 @@ def pagerank_fixed_point(
         F.col(dst).alias("__dst"),
         F.col(cnt).cast("long").alias("__cnt"),
     )
+    # one node type on both sides of every union below (contributions
+    # carry dst's type)
+    node_type = e.schema["__dst"].dataType
     if nodes is None:
         nodes = (
-            e.select(F.col("__src").alias("node"))
+            e.select(F.col("__src").cast(node_type).alias("node"))
             .union(e.select(F.col("__dst").alias("node")))
             .distinct()
         )
     else:
-        nodes = nodes.select(F.col(nodes.columns[0]).alias("node")).distinct()
+        nodes = nodes.select(
+            F.col(nodes.columns[0]).cast(node_type).alias("node")
+        ).distinct()
 
     outdeg = e.groupBy("__src").agg(F.sum("__cnt").alias("__outdeg"))
     ew = e.join(outdeg, "__src")

@@ -68,6 +68,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ._planstats import pinned_partitions
+
 # ---------------------------------------------------------------------------
 # tokenizer
 # ---------------------------------------------------------------------------
@@ -884,8 +886,8 @@ def match_recognize(df: DataFrame, sql: str) -> DataFrame:
     # repartition on the key, sort within partitions, and split into
     # groups pandas-side — one Arrow exchange per PARTITION, not per
     # group. At 100 TB a partition must hold its keys' rows in memory,
-    # the same contract applyInPandas has per key, tuned via
-    # spark.sql.shuffle.partitions.
+    # the same contract applyInPandas has per key, sized by
+    # _planstats.pinned_partitions.
     order = spec.order_by or []
 
     def run_partition_batch(batches):
@@ -901,11 +903,8 @@ def match_recognize(df: DataFrame, sql: str) -> DataFrame:
         # own Arrow batch, and thousands of tiny batches were the cost
         yield pd.DataFrame(rows, columns=out_columns)
 
-    # explicit count: AQE's byte-size coalescing would collapse this
-    # CPU-bound matcher into one task (see cep._grouped_map)
-    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     arranged = df.repartition(
-        n_parts, *[F.col(c) for c in part_cols]
+        pinned_partitions(df), *[F.col(c) for c in part_cols]
     ).sortWithinPartitions(*[F.col(c) for c in (part_cols + order)])
     return arranged.mapInPandas(run_partition_batch, out_schema)
 

@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 
+from ._planstats import pinned_partitions
+
 
 def _as_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
@@ -263,16 +265,13 @@ def mmr_over_candidates(
             cols += ["qsim_u", "max_ssim_u"]
         return pd.DataFrame(out, columns=cols)
 
-    n_parts = int(
-        corpus.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
     schema = (
         f"{query_id_col} long, rk int, neighbor_id long, mmr_score_u long"
     )
     if emit_penalty:
         schema += ", qsim_u long, max_ssim_u long"
     return (
-        tall.repartition(n_parts, query_id_col)
+        tall.repartition(pinned_partitions(tall), query_id_col)
         .groupBy(query_id_col)
         .applyInPandas(greedy, schema)
     )
@@ -759,14 +758,9 @@ def cosine_pairs(
         )
 
     # explicit pre-partition on the group keys: the hash exchange then
-    # satisfies applyInPandas' required distribution at OUR partition
-    # count, instead of an AQE byte-coalesced one — byte-size
-    # coalescing folds every CPU-bound O((n/B)^2) block-pair kernel
-    # into one task and voids the per-task memory contract above
-    n_parts = min(
-        nb * (nb + 1) // 2,
-        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-    )
+    # satisfies applyInPandas' required distribution at the pinned
+    # count, never more tasks than there are block pairs
+    n_parts = pinned_partitions(both, cap=nb * (nb + 1) // 2)
     out = (
         both.repartition(n_parts, "bi", "bj")
         .groupBy("bi", "bj")

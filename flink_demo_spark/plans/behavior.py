@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import layout
+from ..operators._planstats import pinned_partitions
 from .registry import query
 
 
@@ -2685,11 +2686,8 @@ def prequential_summary(clean: DataFrame) -> DataFrame:
             columns=["n_test", "n_covered", "n_correct"],
         )
 
-    n_parts = int(
-        clean.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
     per_src = (
-        clean.repartition(n_parts, "src")
+        clean.repartition(pinned_partitions(clean), "src")
         .groupBy("src")
         .applyInPandas(
             lambda pdf: walk(pdf),
@@ -2949,12 +2947,9 @@ def prequential_by_day(clean: DataFrame) -> DataFrame:
             columns=["epoch_day", "n_test", "n_covered", "n_correct"],
         )
 
-    n_parts = int(
-        clean.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
     per_src_day = (
         clean.withColumn("epoch_day", F.expr("ts_ms DIV 86400000"))
-        .repartition(n_parts, "src")
+        .repartition(pinned_partitions(clean), "src")
         .groupBy("src")
         .applyInPandas(
             lambda pdf: walk(pdf),

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators._planstats import pinned_partitions
 from ..operators.match_recognize import match_recognize
 from .registry import query
 
@@ -414,12 +415,8 @@ def match_recognize_all_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pin the key exchange BEFORE the lag-window: the window and the
     # matcher both need hashpartitioning(user_id), so this is the ONE
-    # shuffle of the query — and making it an explicit
-    # REPARTITION_BY_NUM (not ENSURE_REQUIREMENTS) stops AQE's
-    # byte-size coalescing from collapsing the CPU-bound window+NFA
-    # stage to a handful of tasks (measured 8x on cep at sf0.1)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ev = ev.repartition(n_parts, "user_id")
+    # shuffle of the query, and it is pinned like the matcher's own
+    ev = ev.repartition(pinned_partitions(ev), "user_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     with_dir = ev.select(
         "user_id",

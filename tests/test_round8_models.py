@@ -165,6 +165,28 @@ def test_rrf_fusion_matches_python_model(spark):
     assert score[10] == score[11]
 
 
+def _pagerank_model(edges, nodes, iters, d, scale):
+    """Pure-Python replay of pagerank_fixed_point's documented
+    arithmetic contract, including a ``dst`` outside ``nodes``: it
+    joins the rank frame after one iteration but never counts in N."""
+    outdeg = {}
+    for (u, _v), c in edges.items():
+        outdeg[u] = outdeg.get(u, 0) + c
+    n = len(nodes)
+    r = {v: scale // n for v in nodes}
+    for _ in range(iters):
+        contrib = dict.fromkeys(nodes, 0)
+        for (u, v), c in edges.items():
+            if u in r:
+                contrib[v] = contrib.get(v, 0) + c * (r[u] // outdeg[u])
+        dang = sum(rv for v, rv in r.items() if v not in outdeg)
+        r = {
+            v: (scale * (100 - d) // 100) // n + d * (m + dang // n) // 100
+            for v, m in contrib.items()
+        }
+    return r
+
+
 def test_pagerank_fixed_point_matches_python_model(spark):
     """pagerank_fixed_point vs a dependency-free big-int Python replay
     on a randomized weighted digraph with dangling nodes and an
@@ -187,22 +209,7 @@ def test_pagerank_fixed_point_matches_python_model(spark):
     assert not any(u == 7 or u == 8 for u, _ in edges)
     assert any(v == 7 for _, v in edges)
 
-    # pure-Python replay of the documented arithmetic contract
-    outdeg = {}
-    for (u, _v), c in edges.items():
-        outdeg[u] = outdeg.get(u, 0) + c
-    n = len(nodes)
-    r = {v: scale // n for v in nodes}
-    for _ in range(iters):
-        contrib = {}
-        for (u, v), c in edges.items():
-            contrib[v] = contrib.get(v, 0) + c * (r[u] // outdeg[u])
-        dang = sum(rv for v, rv in r.items() if v not in outdeg)
-        r = {
-            v: (scale * (100 - d) // 100) // n
-            + d * (contrib.get(v, 0) + dang // n) // 100
-            for v in nodes
-        }
+    r = _pagerank_model(edges, nodes, iters, d, scale)
 
     edf = spark.createDataFrame(
         [(u, v, c) for (u, v), c in edges.items()], "src long, dst long, cnt long"
@@ -217,6 +224,33 @@ def test_pagerank_fixed_point_matches_python_model(spark):
     assert got == r
     # rank mass is conserved up to the DIV truncation loss
     assert 0 < sum(got.values()) <= scale
+
+
+def test_pagerank_keeps_dst_outside_explicit_nodes(spark):
+    """Contract for nodes ⊊ dst: contributions to a dst missing from
+    the explicit node frame are kept (that node gets a rank, and sends
+    along its own out-edges from the next iteration), N stays the
+    node frame's size, and ``node`` takes dst's type even when the node
+    frame's column is narrower."""
+    from pyspark.sql.types import LongType
+
+    from flink_demo_spark.operators.graph import pagerank_fixed_point
+
+    scale, d, iters = 10**12, 85, 3
+    # 3 and 4 are outside the node frame: 3 relays to 4, 4 is dangling
+    edges = {(0, 1): 2, (1, 2): 1, (2, 0): 1, (1, 3): 1, (3, 4): 1}
+    nodes = [0, 1, 2]
+    edf = spark.createDataFrame(
+        [(u, v, c) for (u, v), c in edges.items()], "src long, dst long, cnt long"
+    )
+    ndf = spark.createDataFrame([(v,) for v in nodes], "node int")
+    out = pagerank_fixed_point(
+        edf, nodes=ndf, iterations=iters, damping_pct=d, scale=scale
+    )
+    assert out.schema["node"].dataType == LongType()
+    got = {row.node: row.rank_fp for row in out.collect()}
+    assert set(got) == {0, 1, 2, 3, 4}
+    assert got == _pagerank_model(edges, nodes, iters, d, scale)
 
 
 def test_sample_priority_matches_python_model(spark, sf_dir):

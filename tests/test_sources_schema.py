@@ -136,6 +136,66 @@ def test_planstats_estimate_override_and_fallback(spark):
     assert any("planStats.overrideBytes" in str(x.message) for x in w)
 
 
+def test_pinned_partitions_contract(spark):
+    """pinned_partitions: a tiny input gets one task per slot when
+    shuffle.partitions is above the slot count, a sized input one task
+    per advisory slice, a large or unsized one shuffle.partitions; the
+    result never exceeds shuffle.partitions or the caller's cap."""
+    import warnings
+
+    from flink_demo_spark.operators._planstats import pinned_partitions
+
+    slots = spark.sparkContext.defaultParallelism
+    ceiling = slots + 20
+    confs = {
+        "spark.sql.shuffle.partitions": str(ceiling),
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1m",
+    }
+    override = "spark.flinkDemoSpark.planStats.overrideBytes"
+    old = {k: spark.conf.get(k, None) for k in [*confs, override]}
+    df = spark.range(100)
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        assert pinned_partitions(df) == slots
+        for cap in (1, 2, slots, ceiling + 1):
+            assert pinned_partitions(df, cap=cap) == min(cap, slots)
+        # 1 MiB advisory slices: (slots + 5) MiB + 1 byte
+        spark.conf.set(override, str(((slots + 5) << 20) + 1))
+        assert pinned_partitions(df) == slots + 6
+        assert pinned_partitions(df, cap=slots + 2) == slots + 2
+        spark.conf.set(override, str(1 << 50))
+        assert pinned_partitions(df) == ceiling
+        assert pinned_partitions(df, cap=3) == 3
+        spark.conf.unset(override)
+
+        class Unsized:  # the private stats bridge is gone
+            sparkSession = spark
+            _jdf = None
+
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)
+            assert pinned_partitions(Unsized()) == ceiling
+            assert pinned_partitions(Unsized(), cap=2) == 2
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_byte_string_reads_spark_size_confs():
+    from flink_demo_spark.operators._planstats import _byte_string
+
+    for text, n in [
+        ("67108864b", 64 << 20), ("64m", 64 << 20), ("1GB", 1 << 30), ("512", 512),
+    ]:
+        assert _byte_string(text) == n
+    with pytest.raises(ValueError, match="not a byte size"):
+        _byte_string("1.5g")
+
+
 def test_wds_tar_shards_byte_deterministic(spark, sf_dir, tmp_path):
     """Two independent shard writes of the same frame must produce
     byte-identical tars (zeroed tar metadata, key-sorted members,
