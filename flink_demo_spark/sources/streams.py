@@ -114,36 +114,40 @@ def _stage_stream_dir(sf_dir: str, table: str) -> str:
     return d
 
 
-# Session-conf handoff from the file stream sources to the replay
-# runner (streaming/runner.py): the staged parquet byte total of the
-# stream MOST RECENTLY built in this session. The runner CONSUMES the
-# key (read + unset) to derive a scale-adaptive shuffle-partition
-# count for the replay — streaming plans cannot use AQE partition
-# coalescing, so without this every stateful replay pays the session's
-# static partition count in state-store commits and task overhead no
-# matter how small the input is (guide §2: derive partitioning from
-# input size, not a constant tuned for one scale).
-#
-# Known limits of the conf channel (round-13 ADVICE, accepted as
-# perf-only): last-writer-wins, so (a) a stream built but never run
-# leaves a value the NEXT replay consumes, and (b) a multi-source plan
-# (stream-stream join) publishes only the last-built source's bytes.
-# Either case mis-sizes the clamp (more or fewer partitions than
-# ideal) but cannot affect results; the runner also never RAISES the
-# session partition count.
-STAGED_BYTES_CONF = "spark.flinkDemoSpark.stream.stagedInputBytes"
-
-
-def _record_staged_bytes(spark: SparkSession, staged_dir: str) -> None:
-    """Publish the staged dir's parquet byte total for the runner.
-    Same listing rule as :func:`_scan_guard`: the TOTAL across files,
-    one decision per replay."""
-    total = sum(
+def _staged_bytes(staged_dir: str) -> int:
+    """Total size of the ``*.parquet`` files in ``staged_dir``: one
+    decision per replay, whatever the file split."""
+    return sum(
         os.path.getsize(os.path.join(staged_dir, f))
         for f in os.listdir(staged_dir)
         if f.endswith(".parquet")
     )
-    spark.conf.set(STAGED_BYTES_CONF, str(total))
+
+
+def staged_input_bytes(sdf: DataFrame) -> int | None:
+    """Input size of a streaming plan: :func:`_staged_bytes` summed over
+    the distinct directories its parquet file stream sources read.
+    Batch leaves are skipped; any other streaming leaf (rate, socket,
+    the kafka stand-in, a non-parquet or non-local file source) has no
+    known size, which makes the total ``None``."""
+    paths: set[str] = set()
+    leaves = sdf._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if not leaf.isStreaming():
+            continue
+        if leaf.nodeName() != "StreamingRelation":
+            return None
+        source = leaf.dataSource()
+        path = source.options().get("path")
+        if (
+            source.className() != "parquet"
+            or not path.isDefined()
+            or not os.path.isdir(path.get())
+        ):
+            return None
+        paths.add(path.get())
+    return sum(_staged_bytes(p) for p in paths)
 
 
 def eof_pad_hours(gap_ms: int, watermark_ms: int = 600_000) -> int:
@@ -183,11 +187,9 @@ def _scan_guard(
     threshold, so oracle plans there are unchanged; both sides of a
     scale decade sit above it, so exponent methodology stays uniform.
 
-    The threshold reads TOTAL staged parquet bytes at plan-build time
-    (re-listed per call): for multi-file stagings (eof_split chunks)
-    the decision is about the whole replay, not any single file — a
-    consumer staging mixed-size files gets one decision for the sum,
-    by design (round-12 verdict nit, pinned here).
+    The threshold compares :func:`_staged_bytes` (the whole staged
+    dir, re-listed per call) at plan-build time, so a multi-file
+    staging gets one decision for the sum.
 
     REPLAY-ONLY assumption (round-12 ADVICE): the exchange is a
     round-robin ``repartition(n)``, which is NOT deterministic across
@@ -196,12 +198,7 @@ def _scan_guard(
     always-on pipeline writing through a transactional/2PC sink should
     repartition by a stable key column instead to keep exactly-once
     under partial retry."""
-    total = sum(
-        os.path.getsize(os.path.join(staged_dir, f))
-        for f in os.listdir(staged_dir)
-        if f.endswith(".parquet")
-    )
-    if total <= threshold_bytes:
+    if _staged_bytes(staged_dir) <= threshold_bytes:
         return df
     return df.repartition(
         int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -222,7 +219,6 @@ def events_stream(
 
     apply_runtime_confs(spark)
     staged = _stage_stream_dir(sf_dir, "events")
-    _record_staged_bytes(spark, staged)
     reader = spark.readStream.schema(_events_raw_schema(staged))
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -296,7 +292,6 @@ def events_stream_with_eof(
         tmp = sentinel + ".tmp"
         pq.write_table(row, tmp)
         os.replace(tmp, sentinel)  # atomic: concurrent stagers race safely
-    _record_staged_bytes(spark, d)
     reader = spark.readStream.schema(_events_raw_schema(d))
     df = normalize_events_ts(reader.parquet(d))
     if watermark:
@@ -394,7 +389,6 @@ def events_stream_with_eof_split(
         os.replace(sentinel + tmp_sfx, sentinel)
         with open(done, "w") as f:
             f.write("ok\n")
-    _record_staged_bytes(spark, d)
     reader = spark.readStream.schema(_events_raw_schema(d)).option(
         "maxFilesPerTrigger", 1
     )
@@ -424,7 +418,6 @@ def documents_stream(
     )
     apply_runtime_confs(spark)
     staged = _stage_stream_dir(sf_dir, "documents")
-    _record_staged_bytes(spark, staged)
     df = spark.readStream.schema(schema).parquet(staged)
     if scan_guard:
         # documents carry HEAVY per-row work (shingling, hashing,
@@ -462,7 +455,6 @@ def embeddings_stream(
     )
     apply_runtime_confs(spark)
     staged = _stage_stream_dir(sf_dir, "embeddings")
-    _record_staged_bytes(spark, staged)
     df = spark.readStream.schema(schema).parquet(staged)
     if scan_guard:
         df = _scan_guard(df, staged, spark, threshold_bytes=0)

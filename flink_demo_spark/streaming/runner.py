@@ -9,9 +9,15 @@ reference gets from ``RuntimeExecutionMode.BATCH``.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Largest input whose ephemeral checkpoint goes to RAM-backed /dev/shm.
+SCRATCH_MAX_BYTES = 1 << 30
 
 
 def run_available_now(
@@ -23,70 +29,33 @@ def run_available_now(
 ) -> DataFrame:
     """Execute a streaming DF to a memory sink; return the result
     table. ``checkpoint_dir`` persists state/offsets — required when
-    the state will be read back via streaming/state_query.py."""
-    if timeout_sec is None:
-        # default 300s covers every gate/bench scale; off-gate scale
-        # probes (sf10 replay is ~10 min of honest work) raise it via
-        # the env knob instead of patching every call site
-        import os
+    the state will be read back via streaming/state_query.py.
 
+    The replay is sized from its own plan before it starts, because
+    Structured Streaming freezes the state-partition count at the first
+    micro-batch and AQE cannot coalesce it. With the input size from
+    ``sources.streams.staged_input_bytes``:
+
+    - a known size clamps ``spark.sql.shuffle.partitions`` to
+      ``min(session, max(8, ceil(bytes / divisor)))``, with 8 MiB per
+      partition for JVM-only plans and 256 KiB for plans with a Python
+      stage (measurements in OPTIMIZATION_r13.md); the clamp never
+      raises the session count and is undone when the replay ends;
+    - an unknown size (``None``: a non-file or non-parquet source)
+      counts as large: the session count is kept, and the checkpoint
+      goes to Spark's disk default instead of ``/dev/shm``.
+
+    The clamp mutates the session conf, so replays in one session must
+    run one at a time."""
+    from ..sources.streams import staged_input_bytes
+
+    if timeout_sec is None:
+        # off-gate scale probes raise it instead of patching call sites
         timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT_SEC", "300"))
     name = name or f"mem_{uuid.uuid4().hex[:12]}"
     spark: SparkSession = sdf.sparkSession
-    # Scale-adaptive state partitioning (guide §2: derive partitioning
-    # from input size, not a constant tuned for one scale). Streaming
-    # aggregations cannot use AQE partition coalescing — their
-    # state-store partition count is frozen from
-    # spark.sql.shuffle.partitions at the first micro-batch — so a
-    # bounded replay of a few-MB staged input otherwise pays the full
-    # session count (32 here) in state-store commits and task launches
-    # per micro-batch. The file stream sources publish their staged
-    # byte total under STAGED_BYTES_CONF; we CONSUME it (read + unset).
-    # The handoff is session-global last-writer-wins: a stream that was
-    # BUILT but never run leaves a value the next replay consumes, and
-    # a multi-source plan clamps by the last-built source only — both
-    # are perf-only mis-sizings (wrong partition count, same results),
-    # accepted for the simplicity of the conf channel (round-13
-    # ADVICE, documented). We clamp the partition count to
-    # min(session, max(8, ceil(bytes / divisor))), where the divisor
-    # depends on whether the replay has a Python stage — the measured
-    # optima INVERT with the stage kind:
-    #   - JVM-only stateful plans are state-commit-bound: 8 partitions
-    #     beat 32 at sf0.1 (1.553→1.023 s min, 8 wins 5/5 interleaved
-    #     pairs) AND still beat 12/32 at a 10x events replica
-    #     (2.90 vs 3.46/4.73 s min, 4/4 pairs at 11.6 MiB staged)
-    #     → divisor 8 MiB/partition: the count stays at the floor
-    #     until ~64 MiB and reaches the session ceiling at
-    #     session×8 MiB.
-    #   - Python-stage plans (applyInPandasWithState / mapInPandas,
-    #     detected via the analyzed plan) are per-row-CPU-bound past
-    #     the smallest inputs: 8 beat 32 at sf0.1 (4.23→2.44 s min),
-    #     but at the same 10x replica 32 beat 12 beat 8
-    #     (3.83/4.88/6.52 s min, monotone across all 4 reps)
-    #     → divisor 256 KiB/partition, which hits BOTH measured
-    #     optima (sf0.1 → 8, 10x → session 32) and restores full
-    #     parallelism quickly as input grows.
-    # The clamp never RAISES the session value, so a session already
-    # at the driver's 8 is byte-identical, and a 100 TB replay
-    # (input ≫ session×divisor) keeps the session count.
-    from ..sources.streams import STAGED_BYTES_CONF
-
-    # NOTE: the clamp/restore below mutates the session-global
-    # spark.sql.shuffle.partitions; replays are assumed to run one at a
-    # time per session (true for the bench, the driver, and the test
-    # suite). Concurrent run_available_now calls in one session could
-    # interleave clamp/restore and leave the wrong value behind
-    # (round-13 ADVICE) — callers that want concurrent replays should
-    # use separate sessions.
+    staged_bytes = staged_input_bytes(sdf)
     restore_parts: str | None = None
-    staged_bytes: int | None = None
-    staged_raw = spark.conf.get(STAGED_BYTES_CONF, None)
-    if staged_raw is not None:
-        spark.conf.unset(STAGED_BYTES_CONF)
-        try:
-            staged_bytes = int(staged_raw)
-        except ValueError:
-            staged_bytes = None  # malformed: skip the clamp, not the run
     q = None
     try:
         if staged_bytes is not None:
@@ -96,13 +65,11 @@ def run_available_now(
                 cur = None  # non-integer (e.g. vendor "auto"): leave alone
             if cur is not None:
                 plan = sdf._jdf.queryExecution().analyzed().toString()
-                # Node-name match (round-13 ADVICE tightening): "InPandas"
-                # covers FlatMapGroupsInPandasWithState / MapInPandas /
+                # Node-name match: "InPandas" covers
+                # FlatMapGroupsInPandasWithState / MapInPandas /
                 # FlatMapGroupsInPandas, "InArrow" the mapInArrow twins,
                 # "PythonUDF"/"EvalPython" scalar/pandas UDF expressions.
-                # The old bare-"Python" match could false-positive on a
-                # string literal in a filter. A false positive only ramps
-                # parallelism faster (perf-only).
+                # A false positive only ramps parallelism faster.
                 divisor = (
                     (256 << 10)
                     if any(
@@ -121,46 +88,21 @@ def run_available_now(
             .outputMode(output_mode)
             .trigger(availableNow=True)
         )
-        # Ephemeral replay checkpoints are throwaway by construction (this
-        # runner's whole point is bounded replay; nothing ever restarts
-        # from them), so they go to memory-backed scratch when the host
-        # has one: Spark's default temp checkpoint lands under
-        # java.io.tmpdir, which is a DISK path here, charging every
-        # micro-batch the state/offset/commit file I/O of a durable store
-        # without any of the durability (measured: −7% on the stateful
-        # availableNow floor, 4/4 interleaved pairs). A durable pipeline
-        # passes ``checkpoint_dir`` explicitly and is unaffected;
-        # SPARK_GRAFT_STREAM_SCRATCH overrides the scratch root (set it
-        # to a disk path to restore the old behavior).
-        #
-        # SIZE GATE (round-13 verdict What's-wrong #1): tmpfs is
-        # RAM-backed and typically capped well below disk, and replay
-        # state is input-proportional for these bounded replays — so
-        # when the staged input published by the file sources exceeds
-        # SPARK_GRAFT_STREAM_SCRATCH_MAX_BYTES (default 1 GiB) the
-        # checkpoint falls back to Spark's disk default instead of
-        # filling /dev/shm. An explicit SPARK_GRAFT_STREAM_SCRATCH
-        # root is honored unconditionally (the operator chose it).
+        # Nothing restarts from a replay's own checkpoint, so it goes to
+        # RAM-backed scratch when that fits (OPTIMIZATION_r13.md, r14.md);
+        # an explicit SPARK_GRAFT_STREAM_SCRATCH root is always honored.
         scratch_root = None
         if checkpoint_dir is not None:
             writer = writer.option("checkpointLocation", checkpoint_dir)
         else:
-            import os
-            import tempfile
-
             root = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH")
-            if root is None and os.path.isdir("/dev/shm"):
-                try:
-                    shm_max = int(
-                        os.environ.get(
-                            "SPARK_GRAFT_STREAM_SCRATCH_MAX_BYTES",
-                            str(1 << 30),
-                        )
-                    )
-                except ValueError:
-                    shm_max = 1 << 30
-                if staged_bytes is None or staged_bytes <= shm_max:
-                    root = "/dev/shm"
+            if (
+                root is None
+                and os.path.isdir("/dev/shm")
+                and staged_bytes is not None
+                and staged_bytes <= SCRATCH_MAX_BYTES
+            ):
+                root = "/dev/shm"
             if root:
                 scratch_root = tempfile.mkdtemp(prefix="fds_ck_", dir=root)
                 writer = writer.option("checkpointLocation", scratch_root)
@@ -176,13 +118,10 @@ def run_available_now(
             if q is not None and q.isActive:
                 q.stop()
             if scratch_root is not None:
-                import shutil
-
                 shutil.rmtree(scratch_root, ignore_errors=True)
     finally:
-        # restore OUTSIDE the start/await block: a start-time
-        # AnalysisException (e.g. bad output mode) must not leave the
-        # session permanently clamped (round-13 ADVICE, medium).
+        # outside the start/await block: a start-time AnalysisException
+        # must not leave the session clamped
         if restore_parts is not None:
             spark.conf.set("spark.sql.shuffle.partitions", restore_parts)
     return spark.table(name)

@@ -381,53 +381,6 @@ def test_cc_label_stmts_fuzz_vs_union_find():
     con.close()
 
 
-def test_timeout_detector_tws_gate_or_golden(spark):
-    """transformWithStateInPandas twin (round-12 verdict #8): the API
-    exists in PySpark 4.1.2 but its Python state client needs protobuf,
-    absent from this sandbox. Until protobuf appears, the operator must
-    fail with the documented environment error; the moment it appears,
-    this test runs the LongRides golden scenario against exact per-key
-    event-time timers (same assertions as the v1 operator's test)."""
-    import datetime as dt
-
-    from flink_demo_spark.streaming.runner import run_available_now
-    from flink_demo_spark.streaming.tws import (
-        timeout_detector_tws,
-        tws_unavailable_reason,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        (1, t0, "start"),  # never ends -> alert
-        (2, t0, "start"),
-        (2, t0 + dt.timedelta(minutes=30), "end"),  # matched
-        # far-future pair advances the watermark past 1's horizon
-        (99, t0 + dt.timedelta(hours=10), "start"),
-        (99, t0 + dt.timedelta(hours=10, minutes=1), "end"),
-    ]
-    import uuid
-
-    d = tempfile.mkdtemp(prefix=f"tws13_{uuid.uuid4().hex[:6]}_")
-    df = spark.createDataFrame(rows, "key long, ts timestamp, side string")
-    df.coalesce(1).write.mode("overwrite").parquet(d)
-    stream = (
-        spark.readStream.schema(df.schema).parquet(d).withWatermark("ts", "1 second")
-    )
-
-    reason = tws_unavailable_reason()
-    if reason is not None:
-        with pytest.raises(NotImplementedError, match="environment-blocked"):
-            timeout_detector_tws(stream)
-        assert "protobuf" in reason
-        return
-    out = run_available_now(  # pragma: no cover - needs protobuf
-        timeout_detector_tws(stream, horizon_ms=2 * 3600 * 1000),
-        output_mode="append",
-    )
-    alerts = {r.key for r in out.collect()}
-    assert 1 in alerts and 2 not in alerts and 99 not in alerts
-
-
 def test_streaming_timeout_alert_matches_batch_model(spark, sf_dir):
     """The registered timeout query's alert set equals the pure-pandas
     batch model (signup users with zero qualifying purchases, earliest

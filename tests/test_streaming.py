@@ -2002,3 +2002,212 @@ def test_queryable_state_schema_introspection_and_named_rebind(spark):
         read_keyed_state(spark, ckpt, rename={"no_such_buffer": "x"})
     with _pytest.raises(ValueError, match="duplicate"):
         read_keyed_state(spark, ckpt, rename={cnt_buf: "k"})
+
+
+# --- replay sizing (streaming/runner.py) -----------------------------------
+
+
+def _hourly(ev):
+    return (
+        ev.groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.col("w.start").alias("window_start"), "n")
+    )
+
+
+@pytest.fixture
+def session32(spark, monkeypatch):
+    """The session at 32 shuffle partitions; yields every value later
+    set for that conf, and restores the original afterwards."""
+    key = "spark.sql.shuffle.partitions"
+    orig = spark.conf.get(key)
+    real_set = spark.conf.set
+    real_set(key, "32")
+    seen: list[str] = []
+
+    def spy_set(k, v):
+        if k == key:
+            seen.append(str(v))
+        return real_set(k, v)
+
+    monkeypatch.setattr(spark.conf, "set", spy_set)
+    yield seen
+    real_set(key, orig)
+
+
+@pytest.fixture
+def scratch_dirs(monkeypatch):
+    """Every ``dir`` passed to tempfile.mkdtemp while the test runs."""
+    import tempfile
+
+    dirs: list[str | None] = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def spy_mkdtemp(*a, **kw):
+        dirs.append(kw.get("dir") or (a[2] if len(a) > 2 else None))
+        return real_mkdtemp(*a, **kw)
+
+    monkeypatch.setattr(tempfile, "mkdtemp", spy_mkdtemp)
+    return dirs
+
+
+def _force_sizes(monkeypatch, sizes):
+    """Substitute the staged size of each dir: ``sizes`` maps a dir's
+    basename to bytes, or is one byte count for every dir."""
+    import os
+
+    from flink_demo_spark.sources import streams
+
+    monkeypatch.setattr(
+        streams,
+        "_staged_bytes",
+        lambda d: sizes if isinstance(sizes, int) else sizes[os.path.basename(d)],
+    )
+
+
+def test_runner_staged_bytes_clamp(spark, sf_dir, session32, monkeypatch):
+    """run_available_now sizes the replay from the plan's own file
+    source: the state partitions clamp to min(session, max(8, MiB of
+    input)), the session value comes back afterwards, and the rows equal
+    an unclamped replay. The clamp never RAISES the session value."""
+    from flink_demo_spark.sources import streams
+
+    ev = events_stream(spark, sf_dir, watermark="10 minutes")
+    staged = streams.staged_input_bytes(ev)
+    assert staged is not None and 0 < staged < 8 << 20
+    new_rows = run_available_now(_hourly(ev), output_mode="complete").collect()
+    assert session32 == ["8", "32"]  # clamped to the floor, then restored
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    # an input too large to clamp keeps 32 and yields the same rows
+    _force_sizes(monkeypatch, 1 << 40)
+    session32.clear()
+    old_rows = run_available_now(
+        _hourly(events_stream(spark, sf_dir, watermark="10 minutes")),
+        output_mode="complete",
+    ).collect()
+    assert session32 == []
+    assert sorted(map(tuple, new_rows)) == sorted(map(tuple, old_rows))
+    assert len(new_rows) > 0
+    # never raises: a session below the floor keeps its value
+    _force_sizes(monkeypatch, 100 << 20)
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    session32.clear()
+    ev4 = events_stream(spark, sf_dir, watermark="10 minutes")
+    run_available_now(_hourly(ev4), output_mode="complete").collect()
+    assert session32 == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+
+
+def test_runner_clamp_divisor_by_stage_kind(spark, sf_dir, session32, monkeypatch):
+    """The clamp's divisor depends on the replay's stage kind: JVM-only
+    stateful plans ramp at 8 MiB/partition, Python-stage plans at
+    256 KiB/partition. At a forced 100 MiB input the JVM agg clamps to
+    ceil(100/8)=13 and the pandas operator keeps the session 32
+    (ceil(100/0.25)=400 > 32)."""
+    from flink_demo_spark.streaming.lateness import allowed_lateness_tumbling_count
+
+    _force_sizes(monkeypatch, 100 << 20)
+    ev = events_stream(spark, sf_dir, watermark="10 minutes")
+    agg = ev.groupBy(F.window("ts", "1 hour").alias("w")).agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    run_available_now(agg, output_mode="complete")
+    assert session32 == ["13", "32"]  # clamped, then restored
+    session32.clear()
+    feed = events_stream(spark, sf_dir, watermark=None).select(
+        F.col("user_id").alias("key"),
+        (F.unix_millis("ts") - (F.col("event_id") % 101) * 600_000).alias("ts_ms"),
+        F.col("event_id").alias("seq"),
+    )
+    out = allowed_lateness_tumbling_count(
+        feed, window_ms=86_400_000, delay_ms=3_600_000,
+        lateness_ms=7_200_000,
+        key_col="key", ts_col="ts_ms", seq_col="seq",
+    )
+    run_available_now(out, output_mode="append")
+    assert session32 == []  # no clamp: Python stage keeps session
+
+
+def test_runner_sizes_every_source_of_a_join(spark, sf_dir, session32, monkeypatch):
+    """A stream-stream join is sized by the sum of its sources (60 MiB
+    events + 40 MiB documents -> ceil(100/8) = 13), not by the source
+    built last; a self-join reads one dir and counts it once."""
+    from flink_demo_spark.sources import streams
+
+    _force_sizes(monkeypatch, {"events": 60 << 20, "documents": 40 << 20})
+    ev = events_stream(spark, sf_dir)
+    docs = streams.documents_stream(spark, sf_dir)
+    joined = ev.join(docs, ev.user_id == docs.doc_id).select("event_id", "doc_id")
+    run_available_now(joined, output_mode="append").collect()
+    assert session32 == ["13", "32"]
+    a, b = ev.alias("a"), ev.alias("b")
+    self_join = a.join(b, F.col("a.event_id") == F.col("b.event_id"))
+    assert streams.staged_input_bytes(self_join) == 60 << 20
+
+
+def test_runner_unknown_size_keeps_session_and_disk(
+    spark, sf_dir, session32, scratch_dirs, monkeypatch, tmp_path
+):
+    """A replay with no known input size (here a JSON file source) keeps
+    the session partition count and Spark's disk checkpoint, even right
+    after another stream was built and never run."""
+    from flink_demo_spark.sources import streams
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SCRATCH", raising=False)
+    events_stream(spark, sf_dir)  # built, never run
+    (tmp_path / "part.json").write_text(
+        '{"k": "a", "v": 1}\n{"k": "b", "v": 2}\n{"k": "a", "v": 3}\n'
+    )
+    feed = spark.readStream.schema("k string, v long").json(str(tmp_path))
+    out = run_available_now(
+        feed.groupBy("k").agg(F.sum("v").alias("total")), output_mode="complete"
+    )
+    assert {r.k: r.total for r in out.collect()} == {"a": 4, "b": 2}
+    assert session32 == []
+    assert scratch_dirs == []
+    assert streams.staged_input_bytes(feed) is None
+    assert streams.staged_input_bytes(streams.rate_stream(spark)) is None
+
+
+def test_runner_scratch_size_gate(spark, sf_dir, scratch_dirs, monkeypatch):
+    """The /dev/shm ephemeral checkpoint is size-gated: input over
+    runner.SCRATCH_MAX_BYTES falls back to Spark's disk default; an
+    explicit SPARK_GRAFT_STREAM_SCRATCH root is honored unconditionally;
+    results are identical on both sides."""
+    import tempfile
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SCRATCH", raising=False)
+
+    # 1. small input (the real sf file) -> memory-backed scratch
+    ev = events_stream(spark, sf_dir, watermark="10 minutes")
+    small_rows = run_available_now(_hourly(ev), output_mode="complete").collect()
+    assert scratch_dirs and scratch_dirs[-1] == "/dev/shm"
+
+    # 2. input over the gate -> NO scratch dir (disk default)
+    n_before = len(scratch_dirs)
+    _force_sizes(monkeypatch, 2 << 30)
+    ev = events_stream(spark, sf_dir, watermark="10 minutes")
+    big_rows = run_available_now(_hourly(ev), output_mode="complete").collect()
+    assert len(scratch_dirs) == n_before  # gate tripped: no mkdtemp call
+    assert sorted(map(tuple, big_rows)) == sorted(map(tuple, small_rows))
+    assert len(big_rows) > 0
+
+    # 3. an explicit scratch root bypasses the gate entirely
+    root = tempfile.mkdtemp(prefix="fds_gate_root_")
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", root)
+    ev = events_stream(spark, sf_dir, watermark="10 minutes")
+    run_available_now(_hourly(ev), output_mode="complete").collect()
+    assert scratch_dirs[-1] == root
+
+
+def test_runner_restores_partitions_on_start_failure(spark, sf_dir, session32):
+    """A start-time AnalysisException (complete mode without an
+    aggregation) must not leave the session clamped."""
+    from flink_demo_spark.sources import streams
+
+    ev = events_stream(spark, sf_dir, watermark="10 minutes")
+    assert streams.staged_input_bytes(ev) is not None
+    with pytest.raises(Exception):
+        run_available_now(ev.select("event_id"), output_mode="complete")
+    assert session32 == ["8", "32"]  # the clamp happened and was undone
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
