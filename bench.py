@@ -176,9 +176,10 @@ def main() -> None:
     # per-query mins — no per-rep arrays: those overflowed the capture in
     # round 7 and left BENCH_r07.json with parsed:null). Full per-rep
     # detail goes to a committed file instead.
+    value = round(sum(timings.values()), 3)
     summary = {
         "metric": "headline query wall time at sf (noop sink)",
-        "value": round(sum(timings.values()), 3),
+        "value": value,
         "value_r4_comparable_subset": round(
             sum(v for n, v in timings.items() if n in r4_set), 3
         ),
@@ -189,6 +190,9 @@ def main() -> None:
         "rep_policy": "min of 3 full passes, start offset rotated per pass",
         "sf": float(sf) if sf else None,
         "host_factor": host_factor,
+        # the headline total in builder-host seconds, comparable across
+        # hosts (SCALING.md)
+        "value_normalized": round(value / host_factor, 3) if host_factor > 0 else None,
     }
     if stream_eps is not None:
         summary["stream_events_per_sec"] = stream_eps

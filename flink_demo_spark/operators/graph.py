@@ -117,27 +117,12 @@ def pagerank_fixed_point(
     ranks = nodes.crossJoin(F.broadcast(n_row)).select(
         "node", F.expr(f"CAST({scale} AS BIGINT) DIV __n").alias("r")
     )
-    # Zero seed per node, unioned into the contribution aggregation:
-    # with every node guaranteed a group, the per-iteration
-    # nodes ⟕ contrib sort-merge join (two sorts + an exchange of the
-    # node census per round) disappears — the union rides the SAME
-    # groupBy exchange the messages already pay. Measured (round 14,
-    # sf0.1 interleaved A/B): 8/10 pairwise wins, min 1.85 → 1.72 s;
-    # non-loss at a 10x events replica. The null filter keeps exact
-    # parity with the old nodes-join semantics: a contribution onto a
-    # NULL dst must be dropped, never merged with a null node's zero
-    # seed. (A single-pass variant that also folded the dangling-mass
-    # branch into the same aggregation via a marker group was measured
-    # and REJECTED: 0/4 pairs, min 2.28 vs 1.94 s, and the analyzed
-    # plan GREW 51 → 65 relation refs — the dangling scalar must be
-    # re-distributed to every row, so its branch duplicates the whole
-    # aggregate subtree declaratively; the anti-join branch below
-    # duplicates only the rank frame, which runtime ReusedExchange
-    # already dedupes. The 2^iterations tree growth itself is
-    # irreducible without materialization: the recursion carries TWO
-    # state values (rank frame + dangling scalar) and both next values
-    # need the previous frame — and both eager and lazy
-    # materialization measured slower in rounds 12/13, see above.)
+    # Invariant: a zero seed per node rides the contribution groupBy
+    # exchange, so every node keeps a group without a nodes join; the
+    # null-dst filter keeps the old nodes-join semantics (a contribution
+    # onto a NULL dst is dropped); both union sides carry dst's type.
+    # Measurements and the rejected single-pass variant:
+    # OPTIMIZATION_r14.md §2.
     zeros = nodes.select("node", F.lit(0).cast("long").alias("__m"))
     for i in range(iterations):
         contrib = (

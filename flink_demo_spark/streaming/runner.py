@@ -19,6 +19,12 @@ from pyspark.sql import DataFrame, SparkSession
 # Largest input whose ephemeral checkpoint goes to RAM-backed /dev/shm.
 SCRATCH_MAX_BYTES = 1 << 30
 
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FILESYSTEM_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def run_available_now(
     sdf: DataFrame,
@@ -45,8 +51,22 @@ def run_available_now(
       counts as large: the session count is kept, and the checkpoint
       goes to Spark's disk default instead of ``/dev/shm``.
 
-    The clamp mutates the session conf, so replays in one session must
-    run one at a time."""
+    Checkpoint policy: a checkpoint the runner creates itself (a local
+    ``mkdtemp`` dir under ``/dev/shm`` or ``SPARK_GRAFT_STREAM_SCRATCH``,
+    deleted when the replay ends and never restarted from) is written
+    through Hadoop's ``FileSystem`` API
+    (``FileSystemBasedCheckpointFileManager``). It writes the same files
+    as Spark's default ``FileContext`` manager, but its local rename does
+    not fork ``readlink`` per file (SCALING.md). A durable
+    ``checkpoint_dir`` and the unknown-size disk default keep Spark's
+    default manager: its atomic rename is what makes a restart safe on
+    HDFS and object stores, and the disk default may follow a
+    session-level ``checkpointLocation``.
+
+    Both the clamp and the manager are replay-scoped session conf
+    overrides, set before ``start()`` and undone when the replay ends
+    (the executors read the manager from each batch's Hadoop conf), so
+    replays in one session must run one at a time."""
     from ..sources.streams import staged_input_bytes
 
     if timeout_sec is None:
@@ -55,7 +75,8 @@ def run_available_now(
     name = name or f"mem_{uuid.uuid4().hex[:12]}"
     spark: SparkSession = sdf.sparkSession
     staged_bytes = staged_input_bytes(sdf)
-    restore_parts: str | None = None
+    overrides: dict[str, str] = {}  # replay-scoped session conf
+    restore: dict[str, str | None] = {}
     q = None
     try:
         if staged_bytes is not None:
@@ -80,8 +101,7 @@ def run_available_now(
                 )
                 target = min(cur, max(8, -(-staged_bytes // divisor)))
                 if target != cur:
-                    restore_parts = str(cur)
-                    spark.conf.set("spark.sql.shuffle.partitions", str(target))
+                    overrides["spark.sql.shuffle.partitions"] = str(target)
         writer = (
             sdf.writeStream.format("memory")
             .queryName(name)
@@ -106,6 +126,10 @@ def run_available_now(
             if root:
                 scratch_root = tempfile.mkdtemp(prefix="fds_ck_", dir=root)
                 writer = writer.option("checkpointLocation", scratch_root)
+                overrides[CHECKPOINT_MANAGER_CONF] = FILESYSTEM_CHECKPOINT_MANAGER
+        for key, value in overrides.items():
+            restore[key] = spark.conf.get(key, None)
+            spark.conf.set(key, value)
         try:
             q = writer.start()
             finished = q.awaitTermination(timeout_sec)
@@ -121,7 +145,10 @@ def run_available_now(
                 shutil.rmtree(scratch_root, ignore_errors=True)
     finally:
         # outside the start/await block: a start-time AnalysisException
-        # must not leave the session clamped
-        if restore_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", restore_parts)
+        # must not leave the session overridden
+        for key, prev in restore.items():
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
     return spark.table(name)

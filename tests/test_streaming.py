@@ -5,6 +5,8 @@ operators, and the reference's click-count invariant
 from __future__ import annotations
 
 import datetime as dt
+import os
+import random
 
 import pandas as pd
 import pytest
@@ -12,6 +14,8 @@ from pyspark.sql import functions as F
 
 from flink_demo_spark.catalog import load_table
 from flink_demo_spark.sources.streams import events_stream
+from flink_demo_spark.streaming import runner
+from flink_demo_spark.streaming.lateness import _lateness_apply
 from flink_demo_spark.streaming.runner import run_available_now
 from flink_demo_spark.streaming.stateful import (
     ENRICHMENT_OUTPUT_SCHEMA,
@@ -2054,8 +2058,6 @@ def scratch_dirs(monkeypatch):
 def _force_sizes(monkeypatch, sizes):
     """Substitute the staged size of each dir: ``sizes`` maps a dir's
     basename to bytes, or is one byte count for every dir."""
-    import os
-
     from flink_demo_spark.sources import streams
 
     monkeypatch.setattr(
@@ -2211,3 +2213,229 @@ def test_runner_restores_partitions_on_start_failure(spark, sf_dir, session32):
         run_available_now(ev.select("event_id"), output_mode="complete")
     assert session32 == ["8", "32"]  # the clamp happened and was undone
     assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+
+
+@pytest.fixture
+def manager_log(spark, monkeypatch):
+    """Every later change of the checkpoint-manager conf (a class name
+    for a set, ``None`` for an unset), plus its value when each query
+    starts under ``"start"``; the original value comes back afterwards."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    key = runner.CHECKPOINT_MANAGER_CONF
+    orig = spark.conf.get(key, None)
+    real_set, real_unset = spark.conf.set, spark.conf.unset
+    real_start = DataStreamWriter.start
+    log: dict[str, list] = {"changes": [], "start": []}
+
+    def spy_set(k, v):
+        if k == key:
+            log["changes"].append(str(v))
+        return real_set(k, v)
+
+    def spy_unset(k):
+        if k == key:
+            log["changes"].append(None)
+        return real_unset(k)
+
+    def spy_start(self, *a, **kw):
+        log["start"].append(spark.conf.get(key, None))
+        return real_start(self, *a, **kw)
+
+    monkeypatch.setattr(spark.conf, "set", spy_set)
+    monkeypatch.setattr(spark.conf, "unset", spy_unset)
+    monkeypatch.setattr(DataStreamWriter, "start", spy_start)
+    yield log
+    if orig is None:
+        real_unset(key)
+    else:
+        real_set(key, orig)
+
+
+def test_runner_scratch_checkpoint_uses_filesystem_manager(
+    spark, sf_dir, manager_log, monkeypatch
+):
+    """A replay into the runner's own scratch checkpoint starts under
+    the FileSystem-based checkpoint manager, and the session's previous
+    value comes back afterwards: unset when there was none, the old
+    class name when one was set."""
+    fs_manager = runner.FILESYSTEM_CHECKPOINT_MANAGER
+    key = runner.CHECKPOINT_MANAGER_CONF
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SCRATCH", raising=False)
+    assert spark.conf.get(key, None) is None
+    ev = events_stream(spark, sf_dir, watermark="10 minutes")
+    rows = run_available_now(_hourly(ev), output_mode="complete").collect()
+    assert len(rows) > 0
+    assert manager_log == {"changes": [fs_manager, None], "start": [fs_manager]}
+    assert spark.conf.get(key, None) is None
+
+    prev = fs_manager.replace("FileSystemBased", "FileContextBased")
+    spark.conf.set(key, prev)
+    manager_log["changes"].clear()
+    manager_log["start"].clear()
+    ev = events_stream(spark, sf_dir, watermark="10 minutes")
+    run_available_now(_hourly(ev), output_mode="complete").collect()
+    assert manager_log == {"changes": [fs_manager, prev], "start": [fs_manager]}
+    assert spark.conf.get(key) == prev
+
+
+def test_runner_restores_manager_on_start_failure(
+    spark, sf_dir, session32, manager_log, monkeypatch
+):
+    """A start-time AnalysisException undoes both replay overrides, the
+    partition clamp and the checkpoint manager."""
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SCRATCH", raising=False)
+    ev = events_stream(spark, sf_dir, watermark="10 minutes")
+    with pytest.raises(Exception):
+        run_available_now(ev.select("event_id"), output_mode="complete")
+    assert session32 == ["8", "32"]
+    assert manager_log["changes"] == [runner.FILESYSTEM_CHECKPOINT_MANAGER, None]
+    assert spark.conf.get(runner.CHECKPOINT_MANAGER_CONF, None) is None
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+
+
+def test_runner_durable_checkpoint_keeps_default_manager(
+    spark, sf_dir, manager_log, tmp_path
+):
+    """An explicit checkpoint_dir is durable: the replay never touches
+    the checkpoint-manager conf, so Spark's default manager writes it."""
+    ev = events_stream(spark, sf_dir, watermark="10 minutes")
+    ck = str(tmp_path / "ck")
+    run_available_now(_hourly(ev), output_mode="complete", checkpoint_dir=ck)
+    assert manager_log == {"changes": [], "start": [None]}
+    assert os.listdir(os.path.join(ck, "commits"))
+
+
+def test_checkpoint_managers_write_same_files(spark, sf_dir, tmp_path):
+    """An 8-chunk split replay writes the same rows and the same
+    checkpoint files under Spark's default manager and under the
+    FileSystem-based one, verification files included: Spark's
+    ``N.delta.crc`` state checksums and Hadoop's ``.N.delta.crc`` /
+    ``.N.delta.crc.crc`` side files."""
+    from flink_demo_spark.sources.streams import events_stream_with_eof_split
+
+    key = runner.CHECKPOINT_MANAGER_CONF
+    assert spark.conf.get(key, None) is None
+
+    def replay(ck):
+        sdf = events_stream_with_eof_split(spark, sf_dir, n_chunks=8)
+        out = run_available_now(
+            tumbling_agg(sdf), output_mode="append", checkpoint_dir=str(ck)
+        )
+        return sorted(map(tuple, out.collect()))
+
+    def files(root):
+        return sorted(
+            os.path.relpath(os.path.join(d, f), root)
+            for d, _, names in os.walk(root)
+            for f in names
+        )
+
+    default_rows = replay(tmp_path / "default")
+    spark.conf.set(key, runner.FILESYSTEM_CHECKPOINT_MANAGER)
+    try:
+        fs_rows = replay(tmp_path / "fs")
+    finally:
+        spark.conf.unset(key)
+    assert default_rows == fs_rows and len(fs_rows) > 0
+    default_files = files(tmp_path / "default")
+    assert default_files == files(tmp_path / "fs")
+    batches = len(os.listdir(tmp_path / "default" / "commits")) // 2
+    assert batches > 8  # 8 chunks + sentinel: genuinely multi-batch
+    for f in ("1.delta.crc", ".1.delta.crc", ".1.delta.crc.crc"):
+        assert f"state/0/0/{f}" in default_files, f
+    assert "commits/.0.crc" in default_files
+
+
+# --- lateness kernel equivalence (streaming/lateness.py) -------------------
+
+
+def _reference_apply(
+    ts_list, max_ts, wins, key0, window_ms, delay_ms, lateness_ms, flush_ts_ms
+):
+    """The pre-round-13 per-event loop, verbatim semantics: the
+    operator's original implementation (driver-verified green through
+    round 12) kept as the equivalence oracle for the vectorized path."""
+    out = []
+    for ts in ts_list:
+        if flush_ts_ms is not None and ts >= flush_ts_ms:
+            for s in sorted(wins):
+                c, f = wins[s]
+                if f == 0:
+                    out.append((key0, s, 1, c))
+            wins.clear()
+            continue
+        wm = (max_ts - delay_ms) if max_ts is not None else None
+        start = (ts // window_ms) * window_ms
+        end = start + window_ms
+        if wm is not None and end + lateness_ms <= wm:
+            continue
+        c, f = wins.get(start, (0, 0))
+        c += 1
+        if wm is not None and end <= wm:
+            f += 1
+            out.append((key0, start, f, c))
+        wins[start] = [c, f]
+        if max_ts is None or ts > max_ts:
+            max_ts = ts
+            new_wm = max_ts - delay_ms
+            for s in sorted(wins):
+                c2, f2 = wins[s]
+                if f2 == 0 and s + window_ms <= new_wm:
+                    wins[s] = [c2, 1]
+                    out.append((key0, s, 1, c2))
+            for s in list(wins):
+                if s + window_ms + lateness_ms <= new_wm:
+                    del wins[s]
+    return out, max_ts
+
+
+def test_lateness_vectorized_matches_reference_fuzz():
+    """200 random replays x random (window, delay, lateness) params,
+    multi-batch state carry-over and sentinel splits included: the
+    vectorized _lateness_apply must reproduce the per-event loop's
+    emits (as a multiset per window), final window state, and final
+    watermark exactly."""
+    rng = random.Random(1307)
+    for trial in range(200):
+        window = rng.choice([50, 100, 1000])
+        delay = rng.choice([0, 10, 120])
+        lateness = rng.choice([0, 30, 250])
+        n = rng.randrange(0, 120)
+        base = rng.randrange(0, 500)
+        # forward drift with heavy jitter: exercises drop / late-refire
+        ts = [
+            base + i * rng.randrange(0, 40) - rng.randrange(0, 600)
+            for i in range(n)
+        ]
+        use_flush = rng.random() < 0.4
+        flush = base + 10_000 if use_flush else None
+        if use_flush and n:
+            for _ in range(rng.randrange(0, 3)):
+                ts[rng.randrange(n)] = flush + rng.randrange(100)
+        # split into 1-3 micro-batches to exercise state carry
+        cuts = sorted(rng.sample(range(n + 1), rng.randrange(0, 3))) + [n]
+        ref_wins, new_wins = {}, {}
+        ref_max = new_max = None
+        ref_out_all, new_out_all = [], []
+        pos = 0
+        for cut in cuts:
+            chunk = ts[pos:cut]
+            pos = cut
+            ref_out, ref_max = _reference_apply(
+                chunk, ref_max, ref_wins, 7, window, delay, lateness, flush
+            )
+            new_out, new_max = _lateness_apply(
+                chunk, new_max, new_wins, 7, window, delay, lateness, flush
+            )
+            ref_out_all.extend(ref_out)
+            new_out_all.extend(new_out)
+        assert sorted(ref_out_all) == sorted(new_out_all), (
+            f"trial {trial}: emits diverge\nparams w={window} d={delay} "
+            f"l={lateness} flush={flush}\nts={ts}\n"
+            f"ref={sorted(ref_out_all)}\nnew={sorted(new_out_all)}"
+        )
+        assert {int(k): list(v) for k, v in ref_wins.items()} == {
+            int(k): list(v) for k, v in new_wins.items()
+        }, f"trial {trial}: final window state diverges"
+        assert ref_max == new_max, f"trial {trial}: final watermark diverges"
