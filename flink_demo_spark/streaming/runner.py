@@ -56,8 +56,9 @@ def run_available_now(
     deleted when the replay ends and never restarted from) is written
     through Hadoop's ``FileSystem`` API
     (``FileSystemBasedCheckpointFileManager``). It writes the same files
-    as Spark's default ``FileContext`` manager, but its local rename does
-    not fork ``readlink`` per file (SCALING.md). A durable
+    as Spark's default ``FileContext`` manager without most of that
+    path's per-file process forks on a host without native libhadoop
+    (SCALING.md). A durable
     ``checkpoint_dir`` and the unknown-size disk default keep Spark's
     default manager: its atomic rename is what makes a restart safe on
     HDFS and object stores, and the disk default may follow a
